@@ -91,7 +91,7 @@ object Pipeline {
       plog.foreach(_.endStep("load"))
       stage = "process"
       plog.foreach(_.startStep("process"))
-      val (processed, attritionThunk) = conf.attrition match {
+      val (compiled, attritionThunk) = conf.attrition match {
         case Some(a) =>
           val (out, rep) = OpCompiler.compileObserved(
             conf.operations, catalog, caches, a.weightColumn)(primary)
@@ -99,6 +99,13 @@ object Pipeline {
         case None =>
           (OpCompiler.compile(conf.operations, catalog, caches)(primary), None)
       }
+      // computed once per run: with a sink, the validation aggregate, the
+      // row count and the write would each re-run the whole plan (its
+      // scans, shuffles and segmented-scan summaries). Registered in
+      // `caches`, so every exit path unpersists it.
+      val processed =
+        if (conf.storage.isEmpty) compiled
+        else { val p = compiled.persist(); caches += p; p }
       // observe() metrics ride the run's own validation/storage actions —
       // zero extra passes; a run with neither gets one cheap noop drive
       def attritionReport(actionRan: Boolean): Seq[OpCompiler.StageAttrition] =
@@ -157,26 +164,25 @@ object Pipeline {
       val storeT0 = System.currentTimeMillis()
       val rows = conf.storage match {
         case Some(st) =>
-          val counted = processed.persist()
-          val n = counted.count()
+          val n = processed.count()
           st.typ match {
             case "parquet" =>
-              if (st.partitionBy.nonEmpty) Sinks.parquetPartitioned(counted, st.path, st.partitionBy, st.mode)
-              else counted.write.mode(st.mode).parquet(st.path)
-            case "csv"  => counted.write.mode(st.mode).option("header", "true").csv(st.path)
-            case "orc"  => counted.write.mode(st.mode).orc(st.path)
-            case "jdbc" => Sinks.jdbcWrite(counted, st.options("url"), st.path, st.mode)
-            case "noop" => counted.write.format("noop").mode("overwrite").save()
+              if (st.partitionBy.nonEmpty) Sinks.parquetPartitioned(processed, st.path, st.partitionBy, st.mode)
+              else processed.write.mode(st.mode).parquet(st.path)
+            case "csv"  => processed.write.mode(st.mode).option("header", "true").csv(st.path)
+            case "orc"  => processed.write.mode(st.mode).orc(st.path)
+            case "jdbc" => Sinks.jdbcWrite(processed, st.options("url"), st.path, st.mode)
+            case "noop" => processed.write.format("noop").mode("overwrite").save()
             case other  => throw new IllegalArgumentException(s"Unknown storage type: $other")
           }
           // storage.options.catalog_dir: register the written dataset into
           // the DataCatalog (utils/data_catalog.py parity — the reference
           // catalogs its DB tables; graft catalogs the written dataset).
-          // The analysis runs over the still-persisted frame — one cheap
+          // The analysis runs over the persisted frame — one cheap
           // aggregate; catalog_table/catalog_tags override the defaults.
           st.options.get("catalog_dir").foreach { catDir =>
             val cat = new DataCatalog(catDir)
-            cat.registerTable(counted,
+            cat.registerTable(processed,
               table = st.options.getOrElse("catalog_table", conf.name),
               description = Some(s"output of pipeline '${conf.name}'"),
               tags = st.options.get("catalog_tags").map(_.split(",").toSeq).getOrElse(Nil),
@@ -195,7 +201,6 @@ object Pipeline {
               "pipeline", conf.name,
               Map("storage_type" -> st.typ, "path" -> st.path))
           }
-          counted.unpersist()
           n
         case None => -1L
       }

@@ -128,41 +128,37 @@ object Profiler {
     * the distinct-value rank table, which is the right call for discrete/
     * binned data but caps at the broadcast limit. This variant never
     * broadcasts and never funnels rows through one task. Global average
-    * ranks use the canonical distributed-ordinal pattern: range-repartition
-    * on the value, sort within partitions, `zipWithIndex` for global
-    * ordinals (one count-per-partition pass + one offset pass, both
-    * narrow), then a groupBy(value) averaging tied ordinals — identical to
-    * rank + (ties−1)/2 — and a shuffle (sort-merge) join back on the
-    * value. Every stage partitions on the value key; nothing depends on
+    * ranks use the canonical distributed-ordinal pattern: a
+    * [[graft.core.SegmentedScan]] over the range-partitioned, sorted value
+    * whose summaries are per-partition row counts and whose carries are
+    * their prefix sums (each partition's first global ordinal), then a
+    * groupBy(value) averaging tied ordinals — identical to rank +
+    * (ties−1)/2 — and a shuffle (sort-merge) join back on the value.
+    * Every stage partitions on the value key; nothing depends on
     * |distinct| or broadcasts anything.
     */
   def spearmanLarge(df: DataFrame, a: String, b: String, partitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField}
-    val spark = df.sparkSession
     val p = if (partitions > 0) partitions
-            else spark.sessionState.conf.numShufflePartitions
+            else df.sparkSession.sessionState.conf.numShufflePartitions
     def ranks(c: String, out: String): DataFrame = {
+      val byValue = Seq(col("__v"))
       val vals = df.select(col(c).as("__v")).where(col("__v").isNotNull)
-      val sorted = vals.repartitionByRange(p, col("__v")).sortWithinPartitions("__v")
-      val schema = sorted.schema.add(StructField("__ord", LongType, nullable = false))
+        .repartitionByRange(p, byValue: _*)
       // ordinals are 1-based; a tie group's ordinals are consecutive, so
       // avg(ordinal) == rank() + (n_ties - 1)/2 exactly (midpoints are
       // representable: .0 or .5)
-      // catalyst-row ordinals (round 14, the Prototypes.ranked discipline):
-      // no external-Row decode/re-encode of the value stream
-      val ord = sorted.queryExecution.toRdd.zipWithIndex().mapPartitions { it =>
-        val cell = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-        val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-        val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-          .create(schema)
-        it.map { case (r, i) =>
-          cell.update(0, i + 1L)
-          proj(joined.apply(r, cell)): org.apache.spark.sql.catalyst.InternalRow
+      graft.core.SegmentedScan.build(vals, "ordinal", byValue, byValue,
+          Seq(StructField("__ord", LongType, nullable = false)))(_.size.toLong)(
+          _.scanLeft(0L)(_ + _).init) { (start, rows) =>
+        var ordinal = start
+        val withOrd = new graft.core.SegmentedScan.Appender(1)
+        rows.map { r =>
+          ordinal += 1L
+          withOrd.cells.setLong(0, ordinal)
+          withOrd(r)
         }
-      }
-      org.apache.spark.sql.GraftColumnBridge.internalCreateDataFrame(spark, ord, schema)
-        .groupBy(col("__v")).agg(avg(col("__ord")).as(out))
+      }.groupBy(col("__v")).agg(avg(col("__ord")).as(out))
     }
     df.select(col(a).as("__a"), col(b).as("__b"))
       .join(ranks(a, "__ra").withColumnRenamed("__v", "__a"), Seq("__a"))

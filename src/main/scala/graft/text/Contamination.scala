@@ -71,7 +71,7 @@ object Contamination {
     * eval text must not survive in ANY training copy); the output is the
     * rewritten normalized token stream + n_tokens / n_removed_tokens /
     * n_kept_tokens (the [[Dedup.cutDuplicateSpans]] stat family — both
-    * cuts share [[Dedup.rewriteWithoutPositions]]).
+    * cuts share [[Dedup.rewritePerDocRemovals]]).
     *
     * Scale shape: the eval n-gram HASH set broadcasts (suites are MBs —
     * the same contract as [[contaminationStats]]); the corpus probes it

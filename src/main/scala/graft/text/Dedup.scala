@@ -1462,27 +1462,15 @@ object Dedup {
     rewritePerDocRemovals(df, textCol, idCol, rmPerDoc)
   }
 
-  /** Shared token-stream rewrite: drop the (id, position) pairs in
-    * `removed` (columns __cd_id, __tp, 1-based over the normalized
-    * tokenization) from every `base` doc, join the rebuilt text + stats
-    * back onto `df`. Used by [[cutDuplicateSpans]] (keep-first policy
-    * computes `removed`) and Contamination.cutContaminatedSpans (every
-    * eval-matching window is removed). Per-doc reassembly is bounded by
-    * document length — the paragraphDedup precedent. */
-  private[text] def rewriteWithoutPositions(df: DataFrame, base: DataFrame,
-      textCol: String, idCol: String, removed: DataFrame): DataFrame =
-    // (id, position)-pair entry point: collapse to one per-doc array, then
-    // the shared doc-level rewrite below.
-    rewritePerDocRemovals(df, textCol, idCol,
-      removed.groupBy(col("__cd_id"))
-        .agg(collect_list(col("__tp").cast("long")).as("__cd_rm_arr")))
-
-  /** Doc-level rewrite (round 14; per-doc-array entry since round 15 — the
-    * span cut computes its removal arrays in-row and skips the pair
-    * relation entirely): the pre-round-14 shape shuffled the ENTIRE corpus
-    * token stream through a (doc, pos) left join and re-assembled every
-    * document via a collect_list sort — two corpus-token-sized exchanges
-    * for position sets that are duplication/contamination-bound. Now the
+  /** Shared doc-level token-stream rewrite, used by [[cutDuplicateSpans]]
+    * (keep-first policy computes the removal arrays) and
+    * Contamination.cutContaminatedSpans (every eval-matching window is
+    * removed). Both compute their removal arrays in-row, so no (id,
+    * position) pair relation exists (round 15). The pre-round-14 shape
+    * shuffled the ENTIRE corpus token stream through a (doc, pos) left
+    * join and re-assembled every document via a collect_list sort — two
+    * corpus-token-sized exchanges for position sets that are
+    * duplication/contamination-bound. Now the
     * removed positions ride one per-doc array (|affected docs| rows), join
     * at DOC level (broadcast when small), and
     * graft.expr.DropTokenPositions rebuilds the text in-row over the same

@@ -2,7 +2,7 @@ package graft.vec
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField}
 
 /** SSL-prototype pruning and D4 selection — embedding-space data curation
   * beyond plain near-duplicate removal.
@@ -42,11 +42,12 @@ import org.apache.spark.sql.types.{LongType, StructField}
   * cluster: a cluster is corpus/k rows, and a degenerate cell would funnel
   * a corpus fraction through a single window task. Instead it uses the
   * distributed-ordinal pattern of [[graft.quality.Profiler.spearmanLarge]]
-  * — range-repartition on (cluster, cos desc, id), sortWithinPartitions,
-  * zipWithIndex, then rank = global ordinal − cluster offset, where the
-  * offsets come from a k-row count table (driver-bounded by |centroids|,
-  * like langIdFit's vocab bound). Every stage is linear and skew-free; no
-  * stage depends on the largest cluster's size.
+  * — a [[graft.core.SegmentedScan]] over (cluster, cos desc, id) whose
+  * summaries are per-partition cluster counts, so rank = global ordinal −
+  * cluster offset, where the offsets come from a k×parts count table
+  * (driver-bounded by |centroids|, like langIdFit's vocab bound). Every
+  * stage is linear and skew-free; no stage depends on the largest
+  * cluster's size.
   */
 object Prototypes {
 
@@ -127,83 +128,55 @@ object Prototypes {
         (lit(0) - col("__best.ni")).cast("int").as("cluster"),
         col("__best.c").as("cos_to_centroid"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val spark = corpus.sparkSession
     // distributed ordinals: total order (cluster, cos desc, id) → global
     // ordinal; per-cluster rank = ordinal − cluster offset. No per-cluster
     // window, no single-task funnel (spearmanLarge's pattern). No explicit
     // partition count: AQE right-sizes the range exchange from runtime
     // bytes (a pinned numShufflePartitions was a constant tuned for
     // neither scale).
-    val sorted = scored
-      .repartitionByRange(col("cluster"), col("cos_to_centroid").desc, col("__pid"))
-      .sortWithinPartitions(col("cluster"), col("cos_to_centroid").desc, col("__pid"))
-    // ONE counting pass fuses what used to be THREE driver-synchronized
-    // round-trips (round 15): a groupBy(cluster).collect() for the offsets,
-    // zipWithIndex's own per-partition count job, and a broadcast join of
-    // the k-row offset table onto every output row. Pass 1 counts rows per
-    // (partition, cluster) — the sort already clusters equal keys, so this
-    // is a run-length scan — and the driver derives BOTH the per-partition
-    // ordinal starts and the per-cluster (offset, size) map from the same
-    // k×parts-bounded table (|centroids| × numPartitions entries, the same
-    // driver envelope the old k-row collect + RangePartitioner metadata
-    // already paid). Pass 2 reuses pass 1's shuffle files (same lazy
-    // toRdd) and computes rank and kept IN-ROW from the broadcast maps.
-    val sortedRdd = sorted.queryExecution.toRdd
+    val order = Seq(col("cluster"), col("cos_to_centroid").desc, col("__pid"))
     val clusterIdx = 1 // (__pid, cluster, cos_to_centroid)
-    val partCounts: Array[(Int, Array[(Int, Long)])] =
-      sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-        val counts = scala.collection.mutable.LinkedHashMap.empty[Int, Long]
-        it.foreach { r =>
-          val c = r.getInt(clusterIdx)
-          counts.update(c, counts.getOrElse(c, 0L) + 1L)
-        }
-        Iterator.single((pid, counts.toArray))
-      }.collect()
-    // per-partition ordinal starts (partition order IS the total order)
-    val byPid = partCounts.sortBy(_._1)
-    var running = 0L
-    val partStart: Map[Int, Long] = byPid.map { case (pid, cs) =>
-      val s = running; running += cs.map(_._2).sum; pid -> s
-    }.toMap
-    // per-cluster totals and offsets in cluster order (the sort's order)
-    val totals = scala.collection.mutable.TreeMap.empty[Int, Long]
-    byPid.foreach(_._2.foreach { case (c, n) =>
-      totals.update(c, totals.getOrElse(c, 0L) + n)
-    })
-    var off = 0L
-    val offsets = totals.map { case (c, n) =>
-      val o = off; off += n; (c, (o, n))
-    }.toMap
-    val bcOff = spark.sparkContext.broadcast(offsets)
-    val schema = sorted.schema
-      .add(StructField("proto_rank", LongType, nullable = false))
-      .add(StructField("kept", org.apache.spark.sql.types.BooleanType, nullable = false))
-    // ordinals ride CATALYST rows (round 14): `.rdd` would deserialize all
-    // three fields of every row to external objects and createDataFrame
-    // would re-encode them; appending (rank, kept) through a reused
-    // JoinedRow skips both conversions (the sessionize discipline — rows
-    // follow the valid-until-next() SparkPlan contract, downstream copies
-    // when it buffers)
-    val ord = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-      val offs = bcOff.value
-      val cell = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(schema)
-      var ordinal = partStart(pid) // every pid was counted in pass 1
-      it.map { r =>
+    val ranks = graft.core.SegmentedScan.build(scored, "proto_rank", order, order,
+        Seq(StructField("proto_rank", LongType, nullable = false),
+          StructField("kept", BooleanType, nullable = false))) { it =>
+      // summary: rows per cluster — the sort already clusters equal keys,
+      // so this is a run-length scan
+      val counts = scala.collection.mutable.LinkedHashMap.empty[Int, Long]
+      it.foreach { r =>
+        val c = r.getInt(clusterIdx)
+        counts.update(c, counts.getOrElse(c, 0L) + 1L)
+      }
+      counts.toArray
+    } { partCounts =>
+      // ONE counting pass yields BOTH the per-partition ordinal starts
+      // (partition order IS the total order) and the per-cluster
+      // (offset, size) map, k×parts-bounded (|centroids| × numPartitions
+      // entries). Carry: the partition's ordinal start and the (offset,
+      // size) of each cluster it holds.
+      val totals = scala.collection.mutable.TreeMap.empty[Int, Long]
+      partCounts.foreach(_.foreach { case (c, n) =>
+        totals.update(c, totals.getOrElse(c, 0L) + n)
+      })
+      var off = 0L
+      val offsets = totals.map { case (c, n) =>
+        val o = off; off += n; (c, (o, n))
+      }
+      partCounts.scanLeft(0L)(_ + _.map(_._2).sum).zip(partCounts).map { case (start, cs) =>
+        (start, cs.map { case (c, _) => c -> offsets(c) }.toMap)
+      }
+    } { case ((start, offs), rows) =>
+      var ordinal = start
+      val out = new graft.core.SegmentedScan.Appender(2)
+      rows.map { r =>
         ordinal += 1L
         val (clOff, clN) = offs(r.getInt(clusterIdx))
         val rank = ordinal - clOff
-        cell.update(0, rank)
-        cell.update(1, rank > math.floor(pruneFraction * clN).toLong)
-        proj(joined.apply(r, cell)): org.apache.spark.sql.catalyst.InternalRow
+        out.cells.setLong(0, rank)
+        out.cells.setBoolean(1, rank > math.floor(pruneFraction * clN).toLong)
+        out(r)
       }
     }
-    val out = org.apache.spark.sql.GraftColumnBridge
-      .internalCreateDataFrame(spark, ord, schema)
-      .select(col("__pid"), col("cluster"), col("cos_to_centroid"), col("proto_rank"), col("kept"))
-    (out, () => { scored.unpersist(false); () })
+    (ranks, () => { scored.unpersist(false); () })
   }
 
   /** Audit map: (id, cluster, cos_to_centroid, proto_rank, kept) for EVERY

@@ -23,16 +23,11 @@ object GraftColumnBridge {
     * report must fail loudly instead). */
   def observationRow(o: Observation): Option[Row] = o.getRowOrEmpty
 
-  /** A DataFrame over an RDD of CATALYST rows (internalCreateDataFrame is
-    * private[sql]) — the segmented-scan operators' round-14 escape from the
-    * external-Row round trip: `df.rdd` deserializes every field of every
-    * row to java objects and createDataFrame(RDD[Row]) re-encodes them; a
-    * mapPartitions over `queryExecution.toRdd` that emits InternalRows
-    * skips both conversions. Rows emitted by the RDD may follow the
-    * standard SparkPlan contract (valid until the iterator's next()):
-    * downstream operators copy when they buffer. */
-  def internalCreateDataFrame(spark: SparkSession,
-                              rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-                              schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+  /** A DataFrame over a custom logical plan (Dataset.ofRows is
+    * private[sql]) — how graft.core.SegmentedScan frames enter the
+    * Dataset API as plan nodes rather than opaque RDD leaves. The plan is
+    * analyzed here; nothing executes. */
+  def ofRows(spark: SparkSession,
+             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

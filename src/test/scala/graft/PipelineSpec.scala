@@ -96,6 +96,89 @@ class PipelineSpec extends SparkSpec {
       graft.core.OpCompiler.StageAttrition(1, "FilterCondition", 4L, 2L, None, None)))
   }
 
+  test("YAML sessionize pipeline with an expectation and a parquet sink computes its plan once per run") {
+    import org.apache.spark.sql.functions._
+    val in = Files.createTempDirectory("graft_sess_in").toString + "/events"
+    val out = Files.createTempDirectory("graft_sess_out").toString + "/result"
+    // 3 users x 40 events, a 1-hour gap every 10th event, 5 null-user rows
+    spark.range(125).select(
+        when(col("id") < 120, concat(lit("u"), pmod(col("id"), lit(3)))).as("user_id"),
+        timestamp_micros(col("id") * 60000000L + floor(col("id") / 10) * 3600000000L).as("ts"),
+        col("id").cast("double").as("value"))
+      .write.parquet(in)
+    def conf(expectation: String) = Pipeline.fromYaml(
+      s"""name: sessions_once
+         |source: { type: parquet, path: "$in" }
+         |operations:
+         |  - { type: filter, condition: "user_id IS NOT NULL" }
+         |  - type: time_series_processing
+         |    params: { operation: sessionize, time_column: ts, keys: [user_id], gap_seconds: 1800 }
+         |validation:
+         |  expectations:
+         |    - { name: sessions, expression: "$expectation", min_ratio: 1.0 }
+         |attrition: {}
+         |storage: { type: parquet, path: "$out", mode: overwrite }
+         |""".stripMargin)
+    // rows the parquet scans produced in the queries `body` ran, via a
+    // query-execution listener over each executed plan's scan metrics. A
+    // cached plan's scans count once, however many queries read the cache
+    // (stage input records would count the cached-batch reads as well).
+    def sourceRowsScanned(body: => Unit): Long = {
+      import org.apache.spark.sql.execution._
+      val rows = scala.collection.concurrent.TrieMap.empty[Long, Long] // metric id -> value
+      def scans(p: SparkPlan): Unit = p match {
+        case a: adaptive.AdaptiveSparkPlanExec => scans(a.executedPlan)
+        case q: adaptive.QueryStageExec => scans(q.plan)
+        case c: columnar.InMemoryTableScanExec => scans(c.relation.cachedPlan)
+        case f: FileSourceScanExec =>
+          val m = f.metrics("numOutputRows"); rows(m.id) = m.value
+        case other => other.children.foreach(scans)
+      }
+      val l = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = scans(qe.executedPlan)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      drainListenerBus()
+      spark.listenerManager.register(l)
+      try { body; drainListenerBus(); rows.values.sum }
+      finally spark.listenerManager.unregister(l)
+    }
+    val passing = conf("session_id >= 1")
+    // one action over the compiled plan (the range exchange's sampling job
+    // scans the source too)
+    val oneAction = sourceRowsScanned {
+      val (primary, catalog) = Pipeline.load(spark, passing)
+      graft.core.OpCompiler.compile(passing.operations, catalog)(primary)
+        .write.format("noop").mode("overwrite").save()
+    }
+    assert(oneAction >= 125L)
+    var res: Pipeline.Result = null
+    val run = sourceRowsScanned { res = Pipeline.execute(spark, passing) }
+    assert(res.status == "success", res.errors.mkString("; "))
+    assert(res.rowsWritten == 120L)
+    // validation, count and write share one computation of the plan
+    assert(run == oneAction, s"execute scanned $run source rows; one action scans $oneAction")
+    // the attrition report covers every stage, and the rows leaving the
+    // segmented scan are counted exactly. Observations BELOW the scan's
+    // range exchange are not pinned: the exchange's sampling job runs
+    // them a second time and observe() adds both passes.
+    def attritionCovers(r: Pipeline.Result): Unit = {
+      assert(r.attrition.map(a => (a.stage, a.op)) ==
+        Seq((1, "FilterCondition"), (2, "TimeSeriesProcessing")), r.attrition)
+      assert(r.attrition.last.rowsOut == 120L, r.attrition)
+    }
+    attritionCovers(res)
+    // a failing expectation exits before storage: the run's persisted
+    // frame must not outlive it, and the attrition report still fires
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val failed = Pipeline.execute(spark, conf("session_id >= 2"))
+    assert(failed.status == "validation_failed", failed.errors.mkString("; "))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      s"persisted RDDs before ${before.toSeq.sorted}, after " +
+        spark.sparkContext.getPersistentRDDs.keySet.toSeq.sorted)
+    attritionCovers(failed)
+  }
+
   test("YAML cache op: persists mid-pipeline with the named level, unpersists at run end") {
     val in = Files.createTempDirectory("graft_cache_in").toString
     val out = Files.createTempDirectory("graft_cache_out").toString + "/result"
@@ -115,7 +198,7 @@ class PipelineSpec extends SparkSpec {
     assert(res.status == "success", res.errors.mkString("; "))
     assert(res.rowsWritten == 3)
     // run-scoped lifetime: the cache-op frame must be gone after execute
-    // (the storage stage's own persist already cleans up after itself)
+    // (as must the run's own persist of the processed frame)
     assert(persistedCount() == before,
       s"cache-op frame leaked: $before persisted RDDs before, ${persistedCount()} after")
     // the op really persists with the requested level while the run lives
